@@ -8,11 +8,7 @@ from cosmo_spark.operators.histogram import histogram, quantile_cuts
 from cosmo_spark.operators.topk import latest_per_key
 from cosmo_spark.operators.segment_diff import segment_diff
 from cosmo_spark.operators.outliers import sigma_outliers, flag_outliers
-from cosmo_spark.operators.merge import (
-    merge_versioned,
-    merge_into_path,
-    merge_into_partitioned,
-)
+from cosmo_spark.operators.merge import merge_versioned, merge_into_path
 from cosmo_spark.operators.windows import rolling_time_mean, cumulative, boxcar
 from cosmo_spark.operators.dedup import (
     exact_dedup,
@@ -46,7 +42,7 @@ from cosmo_spark.operators.prefix import bucketed_prefix_sum
 __all__ = [
     "asof_join", "describe_by", "histogram", "quantile_cuts", "latest_per_key",
     "segment_diff", "sigma_outliers", "flag_outliers",
-    "merge_versioned", "merge_into_path", "merge_into_partitioned",
+    "merge_versioned", "merge_into_path",
     "rolling_time_mean", "cumulative", "boxcar",
     "exact_dedup", "minhash_candidates", "ngram_jaccard_pairs", "simhash",
     "duplicate_clusters", "embedding_near_dups", "srp_lsh_near_dups",

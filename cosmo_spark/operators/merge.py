@@ -353,27 +353,42 @@ def merge_into_path(
     updates: DataFrame,
     key_cols: str | Sequence[str],
     version_col: str,
+    partition_col: str | None = None,
     retain_versions: int | None = None,
 ) -> int:
-    """Apply ``merge_versioned`` against a parquet table path, publishing
-    the result as the table's next SNAPSHOT VERSION (round-8 verdict
-    next-round #2): every upsert is time-travelable —
-    ``read_snapshot(path, pre)`` still returns the pre-merge rows, and
-    ``snapshot_diff(read_snapshot(pre), read_snapshot(post))`` is exactly
-    the CDC of the version-guard-surviving changes.  Returns the new
-    version id.
+    """Apply ``merge_versioned`` against a versioned snapshot table
+    (sources/versioned), publishing the result as the table's next
+    SNAPSHOT VERSION (round-8 verdict next-round #2): every upsert is
+    time-travelable — ``read_snapshot(path, pre)`` still returns the
+    pre-merge rows, and ``snapshot_diff(read_snapshot(pre),
+    read_snapshot(post))`` is exactly the CDC of the version-guard-
+    surviving changes.  Returns the new version id.  Consumers read the
+    current state via ``sources.versioned.read_current`` (a plain
+    ``spark.read.parquet`` of the table root would partition-discover the
+    data dirs).
 
-    A legacy FLAT parquet table is adopted zero-copy on its first merge:
-    the existing part files MOVE into ``v=1`` before the merged state
-    publishes as ``v=2`` — the pre-merge state is never destroyed.
-    Consumers read the current state via
-    ``sources.versioned.read_current`` (a plain ``spark.read.parquet`` of
-    the table root would partition-discover the ``v=N`` dirs).
+    Flat table (``partition_col`` None): a full rewrite published as
+    ``v=N``.  A legacy FLAT parquet table is adopted zero-copy on its
+    first merge: the existing part files MOVE into ``v=1`` before the
+    merged state publishes as ``v=2`` — the pre-merge state is never
+    destroyed.
 
-    Full-rewrite merge is the no-transaction-log fallback for
-    unpartitioned tables; at scale use ``merge_into_partitioned``
-    (rewrites only affected partitions, in place) or a transactional
-    format's MERGE.
+    Partitioned table: reads ONLY the partitions the update batch
+    touches, merges, stages new generations for exactly those
+    partitions, and publishes a version sharing every untouched
+    generation with its predecessor — a day of updates against a
+    years-deep table reads and rewrites a handful of partition
+    directories.  The affected-partition set is collected (it is bounded
+    by the batch's partition spread — manifest-scale metadata, the same
+    collect every table format's commit protocol performs); ``updates``
+    is persisted because it feeds the emptiness probe, that collect and
+    the merge.  An empty batch publishes nothing and returns the current
+    id.  A raw Hive-layout directory (``<col>=<val>/``, no manifest) is
+    refused — adopt it once via ``sources.versioned.adopt_partitioned``.
+
+    ``partition_col`` must match the table's shape (ValueError
+    otherwise): a flat merge into a partitioned table, or the reverse,
+    would publish a version missing the untouched data.
 
     Single-writer: the whole read → merge → publish runs under the
     table's leased merge lock; a concurrent merge raises
@@ -382,112 +397,23 @@ def merge_into_path(
     the duration of the distributed write.
 
     ``retain_versions`` bounds the history: after publishing, all but the
-    newest N versions vacuum in the same lock acquisition — the retention
-    a per-micro-batch caller (streaming ingest) needs to avoid unbounded
-    full-table copies (r9 self-review #4); None keeps everything.
+    newest N versions vacuum (refcount-safely) in the same lock
+    acquisition — the retention a per-micro-batch caller (streaming
+    ingest) needs to avoid unbounded full-table copies (r9 self-review
+    #4); None keeps everything.
     """
-    import shutil
-
-    from cosmo_spark.sources.versioned import (
-        _adopt_legacy_locked,
-        _new_tmp,
-        _publish_locked,
-        _read_manifest,
-        _vacuum_locked,
-        read_snapshot,
-    )
+    from cosmo_spark.sources import versioned as vs
 
     os.makedirs(path, exist_ok=True)
-    with _table_lock(spark, path) as guard:
-        doc = _read_manifest(path)
-        if doc["current"] is None:
-            doc = _adopt_legacy_locked(path)
-        current = (
-            read_snapshot(spark, path) if doc["current"] is not None else None
-        )
-        merged = merge_versioned(current, updates, key_cols, version_col)
-        tmp = _new_tmp(path)
-        try:
-            merged.write.mode("overwrite").parquet(tmp)
-            version = _publish_locked(path, tmp, doc, guard)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)   # never leak a
-            raise                                    # full-table tmp
-        if retain_versions is not None:
-            _vacuum_locked(path, doc, retain_versions, guard)
-        return version
-
-
-def merge_into_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: str | Sequence[str],
-    version_col: str,
-    partition_col: str,
-    *,
-    layout: str = "versioned",
-    retain_versions: int | None = 1,
-) -> int | None:
-    """Version-guarded merge into a partitioned table, touching ONLY
-    partitions that contain updated keys — the ONE partitioned-upsert
-    entry point (round-10 verdict #6: two coexisting writers were a
-    caller footgun).
-
-    ``layout="versioned"`` (default) routes through the partition-
-    granular snapshot store (sources/versioned_parts): same partition-
-    surgical write cost, but reads go through the manifest
-    (``sources.versioned_parts.read_partitioned``), untouched generations
-    are shared byte-identically across versions, and time travel / CDC /
-    the q157 purge audit work.  ``retain_versions=1`` keeps storage at
-    in-place cost (only the current manifest survives, refcount-safely);
-    pass a larger N or None to retain history.  Returns the published
-    version id.
-
-    ``layout="hive"`` is the explicit escape hatch for tables EXTERNAL
-    engines read by raw directory convention (``month=2024-01/`` dirs,
-    ``spark.read.parquet(path)``): in-place dynamic partition overwrite,
-    no history, returns None.  A table written one way cannot be merged
-    the other way by accident: the versioned path refuses an un-adopted
-    Hive directory (migrate once via
-    ``sources.versioned_parts.adopt_partitioned``) and the hive path
-    refuses a manifest-bearing store.
-
-    The 100 TB upsert path either way: a day of updates against a
-    years-deep table reads and rewrites a handful of partition
-    directories; everything else is untouched bytes.
-    Hive-branch mechanics: dynamic partition overwrite
-    (``partitionOverwriteMode=dynamic``) replaces exactly the partitions
-    present in the written frame.  Requires ``partition_col`` to be part of
-    every update row (the merge key's partition cannot change).
-
-    The affected-partition set never materializes on the driver: the
-    current-table read is restricted by a broadcast left-semi join on the
-    partition column, which dynamic partition pruning (DPP — enabled by
-    default via ``spark.sql.optimizer.dynamicPartitionPruning.enabled``;
-    without it the semi-join still bounds the merge input but the scan
-    lists every directory) turns into an executor-side skip of untouched
-    directories — O(1) driver cost at any partition count.
-
-    ``updates`` is persisted for the duration of the merge: it feeds three
-    consumers (the isEmpty probe, the affected-partition distinct, and the
-    merge itself), and an expensive update lineage must not recompute per
-    action.
-    """
-    from cosmo_spark.sources.files import fs_exists, fs_list_names
-
-    manifest = os.path.join(path, "_versions.json")
-    if layout == "versioned":
-        from cosmo_spark.sources.versioned_parts import (
-            merge_into_partitioned_versioned,
-        )
+    if partition_col is not None:
+        from cosmo_spark.sources.files import fs_exists, fs_list_names
 
         # every probe scheme-portable (Hadoop FS, not os.*): on an
         # hdfs:///object-store table the local calls would raise
         # FileNotFoundError (os.listdir) or silently miss the manifest,
-        # defeating the adopt-or-hive guard (r11 advice)
+        # defeating the adopt guard (r11 advice)
         if (
-            not fs_exists(spark, manifest)
+            not fs_exists(spark, os.path.join(path, vs._MANIFEST))
             and fs_exists(spark, path)
             and any(
                 e.startswith(f"{partition_col}=")
@@ -496,53 +422,39 @@ def merge_into_partitioned(
         ):
             raise ValueError(
                 f"{path} is a raw Hive-layout table with no version "
-                f"manifest: adopt it once via sources.versioned_parts."
-                f"adopt_partitioned, or pass layout='hive' to keep "
-                f"merging in place"
+                f"manifest: adopt it once via sources.versioned."
+                f"adopt_partitioned"
             )
-        return merge_into_partitioned_versioned(
-            spark, path, updates, key_cols, version_col, partition_col,
-            retain_versions=retain_versions,
-        )
-    if layout != "hive":
-        raise ValueError(f"unknown layout {layout!r}: 'versioned' or 'hive'")
-    if fs_exists(spark, manifest):
-        raise ValueError(
-            f"{path} is a versioned partitioned store: merging it with "
-            f"layout='hive' would write outside the manifest and corrupt "
-            f"every snapshot — use the default layout='versioned'"
-        )
-    updates = updates.persist()
+        updates = updates.persist()
     try:
-        if updates.isEmpty():  # bounded probe (limit 1), not an O(rows) action
-            return
-        from cosmo_spark.sources.files import fs_exists
-
-        # same single-writer lock as merge_into_path: two concurrent
-        # partition merges touching overlapping partitions would interleave
-        # read-and-overwrite and lose rows; per-table granularity because
-        # the affected-partition set is not known before reading updates
-        with _table_lock(spark, path) as guard:
-            if fs_exists(spark, path):
-                affected = updates.select(partition_col).distinct()
-                current = spark.read.parquet(path).join(
-                    F.broadcast(affected), partition_col, "left_semi"
-                )
-                merged = merge_versioned(current, updates, key_cols, version_col)
-            else:
-                merged = merge_versioned(None, updates, key_cols, version_col)
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+        with _table_lock(spark, path.rstrip("/")) as guard:
+            doc = vs._read_manifest(path)
+            if doc["current"] is None and partition_col is None:
+                doc = vs._adopt_legacy_locked(path)
+            entry = vs._current_entry(doc, path, partition_col)
+            affected = None
+            if partition_col is not None:
+                if updates.isEmpty():   # bounded probe
+                    return doc["current"] or 0
+                affected = {
+                    r.k
+                    for r in updates.select(
+                        vs._key_expr(partition_col).alias("k")
+                    ).distinct().collect()
+                }
+            current = (
+                vs._read_dirs(spark, path, entry, affected) if entry else None
             )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                guard.verify()   # fencing: a broken lease aborts loudly
-                merged.write.mode("overwrite").partitionBy(partition_col) \
-                    .parquet(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            merged = merge_versioned(current, updates, key_cols, version_col)
+            version = vs._stage_and_publish_locked(
+                path, doc, merged, guard, partition_col, affected
+            )
+            if retain_versions is not None:
+                vs._vacuum_locked(path, doc, retain_versions, guard)
+            return version
     finally:
-        updates.unpersist()
+        if partition_col is not None:
+            updates.unpersist()
 
 
 def snapshot_diff(

@@ -2114,10 +2114,8 @@ def ensure_partitioned_purge_demo(spark: SparkSession, sf_dir: str) -> str:
     versions."""
     import os
 
-    from cosmo_spark.sources.versioned_parts import (
-        merge_into_partitioned_versioned,
-        purge_keys_partitioned,
-    )
+    from cosmo_spark.operators.merge import merge_into_path
+    from cosmo_spark.sources.versioned import purge_keys
 
     base = _purge_parts_dir(sf_dir)
     table = os.path.join(base, "events_parts")
@@ -2129,7 +2127,7 @@ def ensure_partitioned_purge_demo(spark: SparkSession, sf_dir: str) -> str:
         "event_id", "user_id", "event_type", "value"
     )
     v1 = ev.withColumn("ver", F.lit(1))
-    published = merge_into_partitioned_versioned(
+    published = merge_into_path(
         spark, table, v1, "event_id", "ver", "event_type"
     )
     if published > 0:   # an EMPTY corpus publishes nothing — the query
@@ -2138,13 +2136,11 @@ def ensure_partitioned_purge_demo(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("ver", F.lit(2))
             .withColumn("value", F.col("value") + F.lit(1000.0))
         )
-        merge_into_partitioned_versioned(
-            spark, table, upd, "event_id", "ver", "event_type"
-        )
+        merge_into_path(spark, table, upd, "event_id", "ver", "event_type")
         tomb = ev.filter(
             F.col("user_id") % _Q151_TOMB_MOD == 0
         ).select("user_id")
-        purge_keys_partitioned(spark, table, "user_id", tomb, "event_type")
+        purge_keys(spark, table, "user_id", tomb, "event_type")
     open(marker, "w").close()
     return table
 
@@ -2166,7 +2162,7 @@ GROUP BY event_type
 )
 def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition lifecycle audit of the PARTITION-GRANULAR snapshot
-    store (sources/versioned_parts — round-9 verdict #2 closed): the
+    store (sources/versioned — round-9 verdict #2 closed): the
     merge that loaded the table, the version-guarded update and the
     right-to-be-forgotten purge are all read back FROM THE MANIFEST'S
     VERSION HISTORY — n_before from time-traveling to v1, n_updated as
@@ -2184,14 +2180,11 @@ def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions' generations.
     """
     from cosmo_spark.operators.merge import snapshot_diff
-    from cosmo_spark.sources.versioned_parts import (
-        partitioned_versions,
-        read_partitioned,
-    )
+    from cosmo_spark.sources.versioned import read_snapshot, snapshot_versions
 
     tune_session(spark)
     table = ensure_partitioned_purge_demo(spark, sf_dir)
-    versions = partitioned_versions(table)
+    versions = snapshot_versions(table)
     if len(versions) < 3:
         # an EMPTY corpus publishes no versions (the builder degrades);
         # the oracle's GROUP BY over zero rows is empty too.  Fewer than
@@ -2203,9 +2196,9 @@ def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_purged LONG, n_remaining LONG"
         )
     v1, v2, v3 = versions[-3:]
-    old = read_partitioned(spark, table, v1)
-    mid = read_partitioned(spark, table, v2)
-    cur = read_partitioned(spark, table, v3)
+    old = read_snapshot(spark, table, v1)
+    mid = read_snapshot(spark, table, v2)
+    cur = read_snapshot(spark, table, v3)
     before = old.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_before")
     )

@@ -23,7 +23,8 @@ place the protocols touch a filesystem:
   is a single ``create(overwrite=True)`` PUT — atomic object visibility —
   and DIRECTORY publishes must be gated by a manifest/marker rather than
   the rename itself.  :func:`publish_dir` implements the marker protocol
-  (the versioned store's manifest-pointer idea, sources/versioned.py).
+  (the versioned store's manifest-pointer idea; sources/versioned.py
+  publishes its manifest through :func:`write_json_atomic`).
 
 fsync is meaningful only where an OS page cache sits under our control
 (bare local and ``file:`` paths); on other schemes ``close()`` is the

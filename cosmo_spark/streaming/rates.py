@@ -75,7 +75,8 @@ def stream_rollup_cascade(
     from the merged hour rows.  The untouched history is never read beyond
     the keyed anti-join; at 100 TB the three grain tables are partitioned
     by day so the rewrite touches a handful of partition directories
-    (merge_into_partitioned's dynamic-overwrite shape).
+    (the partitioned ``merge_into_path`` shape: only affected partitions
+    get new generations).
 
     Late data needs no special case: a late event lands in its (old)
     minute bucket and the cascade re-derives that bucket's hour/day —

@@ -16,7 +16,6 @@ import pytest
 from cosmo_spark.operators.merge import (
     MergeContentionError,
     _table_lock,
-    merge_into_partitioned,
     merge_into_path,
 )
 
@@ -100,18 +99,18 @@ def test_partitioned_merge_honors_the_same_lock(spark, tmp_path):
         [("k1", 1, "2024-01", "a")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge_into_partitioned(spark, path, base, "k", "ver", "month")
+    merge_into_path(spark, path, base, "k", "ver", "month")
     upd = spark.createDataFrame(
         [("k2", 1, "2024-01", "b")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
     with _table_lock(spark, path):
         with pytest.raises(MergeContentionError):
-            merge_into_partitioned(spark, path, upd, "k", "ver", "month")
-    merge_into_partitioned(spark, path, upd, "k", "ver", "month")
-    from cosmo_spark.sources.versioned_parts import read_partitioned
+            merge_into_path(spark, path, upd, "k", "ver", "month")
+    merge_into_path(spark, path, upd, "k", "ver", "month")
+    from cosmo_spark.sources.versioned import read_snapshot
 
-    assert {r.k for r in read_partitioned(spark, path).collect()} == {"k1", "k2"}
+    assert {r.k for r in read_snapshot(spark, path).collect()} == {"k1", "k2"}
 
 
 def test_expired_lease_recovers_without_operator(spark, tmp_path):

@@ -332,3 +332,42 @@ def test_purge_keys_deletes_only_tombstoned_and_vacuum_erases_bytes(
 
     with _pytest.raises(KeyError):
         read_snapshot(spark, path, v1)
+
+
+def test_purge_keeps_a_merge_published_during_it(spark, tmp_path, monkeypatch):
+    """Lost-update gate for purge_keys: a merge that tries to publish
+    between the purge's read of the current version and the purge's own
+    publish must either land in the purge's input or fail loudly and
+    land after it — never vanish from the new current version."""
+    import cosmo_spark.sources.versioned as versioned_mod
+    from cosmo_spark.operators.merge import merge_into_path
+    from cosmo_spark.sources.versioned import purge_keys, read_current
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "k STRING, user_id LONG, ver INT")
+
+    path = str(tmp_path / "events")
+    write_snapshot(frame([("a", 1, 1), ("b", 2, 1)]), path)
+    late = frame([("c", 3, 1)])
+
+    real_new_tmp = versioned_mod._new_tmp
+    deferred: list[Exception] = []
+
+    def merge_between_read_and_publish(table_path):
+        # the purge has read its input and is about to stage its output:
+        # a rival writer's whole merge attempt happens NOW
+        monkeypatch.setattr(versioned_mod, "_new_tmp", real_new_tmp)
+        try:
+            merge_into_path(spark, table_path, late, "k", "ver")
+        except MergeContentionError as e:
+            deferred.append(e)
+        return real_new_tmp(table_path)
+
+    monkeypatch.setattr(
+        versioned_mod, "_new_tmp", merge_between_read_and_publish
+    )
+    tomb = spark.createDataFrame([(2,)], "user_id LONG")
+    purge_keys(spark, path, "user_id", tomb)
+    if deferred:   # the rival failed loudly; it retries after the purge
+        merge_into_path(spark, path, late, "k", "ver")
+    assert {r.k for r in read_current(spark, path).collect()} == {"a", "c"}

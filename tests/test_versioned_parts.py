@@ -12,16 +12,16 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cosmo_spark.operators.merge import snapshot_diff
-from cosmo_spark.sources.versioned import _read_manifest
-from cosmo_spark.sources.versioned_parts import (
+from cosmo_spark.operators.merge import merge_into_path, snapshot_diff
+from cosmo_spark.sources.versioned import (
     NULL_PART_KEY,
-    merge_into_partitioned_versioned as merge_vp,
+    _read_manifest,
     partition_keys,
-    partitioned_versions,
-    purge_keys_partitioned,
-    read_partitioned,
-    vacuum_partitioned,
+    purge_keys,
+    read_current,
+    read_snapshot,
+    snapshot_versions,
+    vacuum_snapshots,
 )
 
 SCHEMA = "k STRING, ver INT, month STRING, payload STRING"
@@ -44,7 +44,7 @@ def test_merge_shares_untouched_generations(spark, tmp_path):
     February's generation directory is the SAME path in both versions
     with untouched mtimes (shared, not copied)."""
     path = str(tmp_path / "tbl")
-    v1 = merge_vp(spark, path, _base(spark), "k", "ver", "month")
+    v1 = merge_into_path(spark, path, _base(spark), "k", "ver", "month")
     updates = spark.createDataFrame(
         [("k1", 2, "2024-01", "a2"), ("k9", 1, "2024-01", "new"),
          ("k1", 0, "2024-01", "stale")],
@@ -56,7 +56,7 @@ def test_merge_shares_untouched_generations(spark, tmp_path):
         f: os.path.getmtime(os.path.join(path, feb_rel, f))
         for f in os.listdir(os.path.join(path, feb_rel))
     }
-    v2 = merge_vp(spark, path, updates, "k", "ver", "month")
+    v2 = merge_into_path(spark, path, updates, "k", "ver", "month")
     assert (v1, v2) == (1, 2)
     doc2 = _read_manifest(path)
     p1 = {e["version"]: e["parts"] for e in doc2["versions"]}
@@ -66,7 +66,7 @@ def test_merge_shares_untouched_generations(spark, tmp_path):
         f: os.path.getmtime(os.path.join(path, feb_rel, f))
         for f in os.listdir(os.path.join(path, feb_rel))
     }
-    assert _state(read_partitioned(spark, path)) == {
+    assert _state(read_current(spark, path)) == {
         "k1": (2, "2024-01", "a2"), "k2": (1, "2024-01", "b"),
         "k3": (1, "2024-02", "c"), "k4": (1, "2024-02", "d"),
         "k9": (1, "2024-01", "new"),
@@ -74,23 +74,23 @@ def test_merge_shares_untouched_generations(spark, tmp_path):
 
 
 def test_time_travel_and_cdc_match_applied_updates(spark, tmp_path):
-    """The verdict's done-criteria verbatim: read_partitioned(pre)
+    """The verdict's done-criteria verbatim: read_snapshot(pre)
     returns the OLD rows after a partitioned merge, and snapshot_diff
     equals the applied updates."""
     path = str(tmp_path / "tbl")
-    merge_vp(spark, path, _base(spark), "k", "ver", "month")
+    merge_into_path(spark, path, _base(spark), "k", "ver", "month")
     updates = spark.createDataFrame(
         [("k1", 2, "2024-01", "a2"), ("k9", 1, "2024-01", "new")], SCHEMA
     )
-    merge_vp(spark, path, updates, "k", "ver", "month")
-    assert _state(read_partitioned(spark, path, version=1)) == _state(
+    merge_into_path(spark, path, updates, "k", "ver", "month")
+    assert _state(read_snapshot(spark, path, version=1)) == _state(
         _base(spark)
     )
     diff = {
         r.k: r.change_type
         for r in snapshot_diff(
-            read_partitioned(spark, path, version=1),
-            read_partitioned(spark, path, version=2),
+            read_snapshot(spark, path, version=1),
+            read_snapshot(spark, path, version=2),
             "k",
         ).collect()
     }
@@ -99,16 +99,16 @@ def test_time_travel_and_cdc_match_applied_updates(spark, tmp_path):
 
 def test_empty_updates_noop_and_manifest_pruned_read(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    v1 = merge_vp(spark, path, _base(spark), "k", "ver", "month")
-    v_same = merge_vp(
+    v1 = merge_into_path(spark, path, _base(spark), "k", "ver", "month")
+    v_same = merge_into_path(
         spark, path, _base(spark).limit(0), "k", "ver", "month"
     )
     assert (v1, v_same) == (1, 1)
-    jan = read_partitioned(spark, path, partitions=["2024-01"])
+    jan = read_snapshot(spark, path, partitions=["2024-01"])
     assert {r.k for r in jan.collect()} == {"k1", "k2"}
     assert partition_keys(path) == ["2024-01", "2024-02"]
     with pytest.raises(KeyError):
-        read_partitioned(spark, path, version=7)
+        read_snapshot(spark, path, version=7)
 
 
 def test_null_int_and_date_partition_values_roundtrip(spark, tmp_path):
@@ -118,9 +118,9 @@ def test_null_int_and_date_partition_values_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [("a", 1, None, "x"), ("b", 1, "2024-03", "y")], SCHEMA
     )
-    merge_vp(spark, path, df, "k", "ver", "month")
+    merge_into_path(spark, path, df, "k", "ver", "month")
     assert partition_keys(path) == ["2024-03", NULL_PART_KEY]
-    got = read_partitioned(spark, path, partitions=[None])
+    got = read_snapshot(spark, path, partitions=[None])
     assert [(r.k, r.month) for r in got.collect()] == [("a", None)]
 
     path2 = str(tmp_path / "tint")
@@ -128,22 +128,22 @@ def test_null_int_and_date_partition_values_roundtrip(spark, tmp_path):
         [("a", 1, 7, "x"), ("b", 1, 12, "y")],
         "k STRING, ver INT, bucket INT, payload STRING",
     )
-    merge_vp(spark, path2, di, "k", "ver", "bucket")
+    merge_into_path(spark, path2, di, "k", "ver", "bucket")
     assert partition_keys(path2) == ["12", "7"]
     assert {r.k for r in
-            read_partitioned(spark, path2, partitions=[7]).collect()} == {"a"}
+            read_snapshot(spark, path2, partitions=[7]).collect()} == {"a"}
     # the typed column survives IN the data files
-    assert dict(read_partitioned(spark, path2).dtypes)["bucket"] == "int"
+    assert dict(read_snapshot(spark, path2).dtypes)["bucket"] == "int"
 
     path3 = str(tmp_path / "tdate")
     dd = spark.createDataFrame(
         [("a", 1, datetime.date(2024, 1, 2), "x")],
         "k STRING, ver INT, day DATE, payload STRING",
     )
-    merge_vp(spark, path3, dd, "k", "ver", "day")
+    merge_into_path(spark, path3, dd, "k", "ver", "day")
     assert partition_keys(path3) == ["2024-01-02"]
     assert (
-        read_partitioned(
+        read_snapshot(
             spark, path3, partitions=[datetime.date(2024, 1, 2)]
         ).count()
         == 1
@@ -163,11 +163,11 @@ def test_purge_rewrites_only_affected_and_drops_empty_partition(
          ("k3", 1, "2024-02", "c"), ("k4", 1, "2024-03", "d")],
         SCHEMA,
     )
-    merge_vp(spark, path, base, "k", "ver", "month")
+    merge_into_path(spark, path, base, "k", "ver", "month")
     doc1 = _read_manifest(path)
     parts1 = doc1["versions"][0]["parts"]
     tomb = spark.createDataFrame([("k1",), ("k3",)], "k STRING")
-    v2 = purge_keys_partitioned(spark, path, "k", tomb, "month")
+    v2 = purge_keys(spark, path, "k", tomb, "month")
     assert v2 == 2
     parts2 = {
         e["version"]: e["parts"]
@@ -176,21 +176,21 @@ def test_purge_rewrites_only_affected_and_drops_empty_partition(
     assert parts2["2024-03"] == parts1["2024-03"]        # untouched, shared
     assert parts2["2024-01"] != parts1["2024-01"]        # rewritten
     assert "2024-02" not in parts2                       # fully purged
-    assert _state(read_partitioned(spark, path)) == {
+    assert _state(read_snapshot(spark, path)) == {
         "k2": (1, "2024-01", "b"), "k4": (1, "2024-03", "d"),
     }
     diff = {
         r.k: r.change_type
         for r in snapshot_diff(
-            read_partitioned(spark, path, version=1),
-            read_partitioned(spark, path, version=2),
+            read_snapshot(spark, path, version=1),
+            read_snapshot(spark, path, version=2),
             "k",
         ).collect()
     }
     assert diff == {"k1": "delete", "k3": "delete"}
     # no-op purge publishes nothing
     ghost = spark.createDataFrame([("nope",)], "k STRING")
-    assert purge_keys_partitioned(spark, path, "k", ghost, "month") == 2
+    assert purge_keys(spark, path, "k", ghost, "month") == 2
 
 
 def test_vacuum_refcounts_shared_generations(spark, tmp_path):
@@ -198,23 +198,23 @@ def test_vacuum_refcounts_shared_generations(spark, tmp_path):
     surviving version references; shared ones stay readable, and the
     purged partition's bytes are physically gone."""
     path = str(tmp_path / "tbl")
-    merge_vp(spark, path, _base(spark), "k", "ver", "month")
+    merge_into_path(spark, path, _base(spark), "k", "ver", "month")
     upd = spark.createDataFrame([("k1", 2, "2024-01", "a2")], SCHEMA)
-    merge_vp(spark, path, upd, "k", "ver", "month")
+    merge_into_path(spark, path, upd, "k", "ver", "month")
     parts_by_v = {
         e["version"]: e["parts"]
         for e in _read_manifest(path)["versions"]
     }
     jan_old = parts_by_v[1]["2024-01"]
     feb_shared = parts_by_v[1]["2024-02"]
-    removed = vacuum_partitioned(spark, path, keep_last=1)
+    removed = vacuum_snapshots(spark, path, keep_last=1)
     assert removed == [1]
     assert not os.path.isdir(os.path.join(path, jan_old))      # exclusive: gone
     assert os.path.isdir(os.path.join(path, feb_shared))       # shared: kept
-    assert partitioned_versions(path) == [2]
+    assert snapshot_versions(path) == [2]
     with pytest.raises(KeyError):
-        read_partitioned(spark, path, version=1)
-    assert _state(read_partitioned(spark, path))["k1"] == (2, "2024-01", "a2")
+        read_snapshot(spark, path, version=1)
+    assert _state(read_snapshot(spark, path))["k1"] == (2, "2024-01", "a2")
 
 
 def test_abandoned_generation_reaped_next_publish(spark, tmp_path):
@@ -224,11 +224,11 @@ def test_abandoned_generation_reaped_next_publish(spark, tmp_path):
     import socket
 
     path = str(tmp_path / "tbl")
-    merge_vp(spark, path, _base(spark), "k", "ver", "month")
+    merge_into_path(spark, path, _base(spark), "k", "ver", "month")
     host = socket.gethostname()
     orphan = os.path.join(path, "parts", f"g-999999999-{host}-deadbeef")
     os.makedirs(orphan)
-    merge_vp(
+    merge_into_path(
         spark, path,
         spark.createDataFrame([("k1", 2, "2024-01", "a2")], SCHEMA),
         "k", "ver", "month",
@@ -244,13 +244,13 @@ def test_concurrent_writer_blocked_by_lease(spark, tmp_path):
     """Two overlapping merges serialize on the table lease: versions come
     out 1, 2 and both batches land — no lost update."""
     path = str(tmp_path / "tbl")
-    merge_vp(spark, path, _base(spark), "k", "ver", "month")
+    merge_into_path(spark, path, _base(spark), "k", "ver", "month")
     a = spark.createDataFrame([("k1", 2, "2024-01", "A")], SCHEMA)
     b = spark.createDataFrame([("k1", 3, "2024-01", "B")], SCHEMA)
-    va = merge_vp(spark, path, a, "k", "ver", "month")
-    vb = merge_vp(spark, path, b, "k", "ver", "month")
+    va = merge_into_path(spark, path, a, "k", "ver", "month")
+    vb = merge_into_path(spark, path, b, "k", "ver", "month")
     assert (va, vb) == (2, 3)
-    assert _state(read_partitioned(spark, path))["k1"] == (3, "2024-01", "B")
+    assert _state(read_snapshot(spark, path))["k1"] == (3, "2024-01", "B")
 
 
 def test_crash_between_rename_and_manifest_preserves_old_version(
@@ -260,28 +260,28 @@ def test_crash_between_rename_and_manifest_preserves_old_version(
     parts/ but the manifest write dies.  The table must keep serving the
     old version, and the next successful merge must reap the orphaned
     generations and publish cleanly."""
-    import cosmo_spark.sources.versioned_parts as vp
+    import cosmo_spark.sources.versioned as vp
 
     path = str(tmp_path / "tbl")
-    merge_vp(spark, path, _base(spark), "k", "ver", "month")
-    state_v1 = _state(read_partitioned(spark, path))
+    merge_into_path(spark, path, _base(spark), "k", "ver", "month")
+    state_v1 = _state(read_snapshot(spark, path))
 
-    real_write = vp._write_manifest
+    real_write = vp.write_json_atomic
     calls = {"n": 0}
 
     def dying_write(p, doc):
         calls["n"] += 1
         raise RuntimeError("injected crash before manifest commit")
 
-    monkeypatch.setattr(vp, "_write_manifest", dying_write)
+    monkeypatch.setattr(vp, "write_json_atomic", dying_write)
     upd = spark.createDataFrame([("k1", 2, "2024-01", "a2")], SCHEMA)
     with pytest.raises(RuntimeError, match="injected"):
-        merge_vp(spark, path, upd, "k", "ver", "month")
-    monkeypatch.setattr(vp, "_write_manifest", real_write)
+        merge_into_path(spark, path, upd, "k", "ver", "month")
+    monkeypatch.setattr(vp, "write_json_atomic", real_write)
 
     # old version still serves; the orphan generation exists but is
     # invisible (manifest never adopted it)
-    assert _state(read_partitioned(spark, path)) == state_v1
+    assert _state(read_snapshot(spark, path)) == state_v1
     doc = _read_manifest(path)
     assert doc["current"] == 1
     referenced = {rel for e in doc["versions"] for rel in e["parts"].values()}
@@ -295,9 +295,9 @@ def test_crash_between_rename_and_manifest_preserves_old_version(
     old = __import__("time").time() - 100 * 3600
     for rel in orphans:
         os.utime(os.path.join(path, rel), (old, old))
-    v = merge_vp(spark, path, upd, "k", "ver", "month")
+    v = merge_into_path(spark, path, upd, "k", "ver", "month")
     assert v == 2
-    assert _state(read_partitioned(spark, path))["k1"] == (2, "2024-01", "a2")
+    assert _state(read_snapshot(spark, path))["k1"] == (2, "2024-01", "a2")
     for rel in orphans:
         assert not os.path.isdir(os.path.join(path, rel))
 
@@ -307,24 +307,22 @@ def test_adopt_hive_layout_table(spark, tmp_path):
     rewrites through staging (files gain the in-file partition column),
     publishes v1 identical row-for-row, and the adopted table then
     merges/travels like a native one.  Double adoption fails loudly."""
-    from cosmo_spark.operators.merge import merge_into_partitioned
-    from cosmo_spark.sources.versioned_parts import adopt_partitioned
+    from cosmo_spark.sources.versioned import adopt_partitioned
 
     hive = str(tmp_path / "hive")
-    merge_into_partitioned(spark, hive, _base(spark), "k", "ver", "month",
-                           layout="hive")
+    _base(spark).write.partitionBy("month").parquet(hive)
 
     path = str(tmp_path / "vp")
     v1 = adopt_partitioned(spark, path, hive, "month")
     assert v1 == 1
-    assert _state(read_partitioned(spark, path)) == _state(_base(spark))
+    assert _state(read_snapshot(spark, path)) == _state(_base(spark))
     assert partition_keys(path) == ["2024-01", "2024-02"]
     # in-file partition column present (the multi-path-read contract)
-    assert "month" in read_partitioned(spark, path).columns
+    assert "month" in read_snapshot(spark, path).columns
 
     upd = spark.createDataFrame([("k1", 2, "2024-01", "a2")], SCHEMA)
-    assert merge_vp(spark, path, upd, "k", "ver", "month") == 2
-    assert _state(read_partitioned(spark, path, version=1)) == _state(
+    assert merge_into_path(spark, path, upd, "k", "ver", "month") == 2
+    assert _state(read_snapshot(spark, path, version=1)) == _state(
         _base(spark)
     )
     with pytest.raises(RuntimeError, match="already has published"):

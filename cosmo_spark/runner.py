@@ -85,8 +85,16 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _ingest_sms(spark, sms_dir: str, data_dir: str) -> None:
-    """SMS ingest job: catalog + exposures with version-guarded merges
-    (ref: SMSFinder + ingest_files, cosmo/sms/ingest_sms.py:201-301)."""
+    """SMS ingest round: catalog + exposures with version-guarded merges
+    (ref: SMSFinder + ingest_files, cosmo/sms/ingest_sms.py:201-301).
+
+    A round costs O(new reports): only the reports the finder flags as new
+    are parsed, validated and merged, whatever the history on disk.
+    Publish order makes the ``sms_file_stats`` log the commit marker — the
+    exposures publish first, the log last — so a report whose rows failed
+    to parse or publish is still new to the next run, which redoes it;
+    re-merging rows that did land is a no-op under the FILEID guard.
+    """
     from cosmo_spark.operators.merge import merge_into_path
     from cosmo_spark.sources.sms import find_new, parse_sms_reports, sms_catalog
     from cosmo_spark.sources.versioned import read_current
@@ -98,19 +106,19 @@ def _ingest_sms(spark, sms_dir: str, data_dir: str) -> None:
     # merges publish snapshot versions now — read the manifest-pinned
     # current state, not the table root
     log = read_current(spark, catalog_path) if os.path.exists(catalog_path) else None
-    # materialize eagerly: `new` is derived from the catalog table we are
-    # about to overwrite — a lazy plan would re-read the post-merge log and
-    # silently find nothing new
-    new = find_new(catalog, log).localCheckpoint()
-    n_new = new.count()
-    print(f"sms ingest: {n_new} new files")
-    if not n_new:
+    # a local read: the catalog is an in-memory relation and find_new has
+    # already resolved the log, so `new` is also the log merge's input
+    new = find_new(catalog, log)
+    new_files = [r.FILENAME for r in new.select("FILENAME").collect()]
+    print(f"sms ingest: {len(new_files)} new files")
+    if not new_files:
         return
+    # validates eagerly: a malformed report raises before anything publishes
+    exposures = parse_sms_reports(spark, new_files)
+    n_rows = exposures.count()
+    merge_into_path(spark, rows_path, exposures, "EXPOSURE", "FILEID")
     merge_into_path(spark, catalog_path, new, "SMSID", "VERSION")
-    exposures = parse_sms_reports(spark, sms_dir)
-    new_rows = exposures.join(new.select("FILEID"), "FILEID", "left_semi")
-    merge_into_path(spark, rows_path, new_rows, "EXPOSURE", "FILEID")
-    print(f"sms ingest: merged {new_rows.count()} exposure rows")
+    print(f"sms ingest: merged {n_rows} exposure rows")
 
 
 if __name__ == "__main__":

@@ -9,12 +9,14 @@ supersede (:201-294), and upserts with conflict rules (:154-198).
 
 Spark formulation (this module):
 - ``spark.read.text`` with ``input_file_name()`` — every report in the
-  directory parses in one distributed job (the reference loops per file);
+  directory, or just a given list of report files, parses in one
+  distributed job (the reference loops per file);
 - line filters + one ``regexp_extract`` per column — pure codegen, no UDF;
 - a count-based parse validation action mirroring the reference's eager
   ``ValueError`` on malformed files;
-- catalog/version logic as set operations (top-version window, anti-join
-  new-file discovery) and the version-guarded merge from operators.merge.
+- catalog/version logic: the top version per SMSID picked on the driver
+  from the directory listing, anti-join new-file discovery, and the
+  version-guarded merge from operators.merge.
 
 Line format (this engine's canonical SMS serialization — the reference's
 exact column widths are data-dependent; semantics, typing, and derivations
@@ -32,11 +34,11 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from cosmo_spark.operators.topk import latest_per_key
 
 #: whitespace-separated field spec: (position, cast type)
 _FIELDS: list[tuple[str, str]] = [
@@ -70,22 +72,25 @@ class SmsParseError(ValueError):
 
 
 def parse_sms_reports(
-    spark: SparkSession, path: str, validate: bool = True
+    spark: SparkSession, path: str | Sequence[str], validate: bool = True
 ) -> DataFrame:
-    """Parse every ``*.txt`` SMS report under ``path`` into typed exposure
-    rows, one distributed job.
+    """Parse SMS reports into typed exposure rows, one distributed job:
+    every ``*.txt`` report under ``path`` when it is a directory, or
+    exactly the report files ``path`` lists — the incremental form an
+    ingest round uses, so a round parses O(new reports) lines whatever
+    the history on disk.
 
     Output: FIXTURES.md §4 schema — all 15 columns plus ``FILEID``
     (``smsid || version`` derived from the filename) and
-    ``FPPOS = FPOFFSET + 3`` (ref: ingest_sms.py:141).
+    ``FPPOS = FPOFFSET + 3`` (ref: ingest_sms.py:141).  With ``validate``
+    the malformed-line check runs eagerly, before the caller can publish
+    anything, and raises SmsParseError.
 
     Scale: ``spark.read.text`` splits by file; parsing is per-line regexp in
     codegen.  The reference's per-file Python loop becomes task parallelism.
     """
-    lines = (
-        spark.read.text(os.path.join(path, "*.txt"))
-        .withColumn("__file", F.input_file_name())
-    )
+    files = [os.path.join(path, "*.txt")] if isinstance(path, str) else list(path)
+    lines = spark.read.text(files).withColumn("__file", F.input_file_name())
     body = lines.filter(
         (F.length(F.trim("value")) > 0)
         & ~F.col("value").startswith("#")
@@ -123,34 +128,48 @@ def parse_sms_reports(
 
 
 def sms_catalog(spark: SparkSession, path: str) -> DataFrame:
-    """File catalog (FIXTURES.md §3): one row per report file found, with
+    """File catalog (FIXTURES.md §3): one row per SMSID found, with
     SMSID/VERSION split from the filename and only the top version per SMSID
     retained (ref: ingest_sms.py:274-280 — string-max version wins).
+
+    The top version is picked on the driver from the directory listing
+    this function already holds — the same string max, with no shuffle —
+    and the rows enter Spark as an Arrow table, a local relation: reading
+    them back (the ingest round collects its new-file set) runs no Spark
+    job and starts no Python worker.
     """
-    files = [
-        f for f in sorted(os.listdir(path)) if _NAME_RE.match(f)
-    ]
-    if not files:
+    top: dict[str, tuple[str, str]] = {}
+    for f in os.listdir(path):
+        m = _NAME_RE.match(f)
+        if m and m.group("version") > top.get(m.group("smsid"), ("",))[0]:
+            top[m.group("smsid")] = (m.group("version"), f)
+    if not top:
         raise OSError(f"no SMS files found in {path}")  # ref: ingest_sms.py:282-284
-    rows = [
-        (m.group("smsid"), m.group("version"),
-         m.group("smsid") + m.group("version"), os.path.join(path, f))
-        for f in files if (m := _NAME_RE.match(f))
-    ]
-    catalog = spark.createDataFrame(
-        rows, "SMSID STRING, VERSION STRING, FILEID STRING, FILENAME STRING"
-    ).withColumn("INGEST_DATE", F.current_timestamp())
-    return latest_per_key(catalog, "SMSID", ["VERSION"])
+    ids = sorted(top)
+    table = pa.table({
+        "SMSID": ids,
+        "VERSION": [top[i][0] for i in ids],
+        "FILEID": [i + top[i][0] for i in ids],
+        "FILENAME": [os.path.join(path, top[i][1]) for i in ids],
+    })
+    return spark.createDataFrame(table).withColumn(
+        "INGEST_DATE", F.current_timestamp()
+    )
 
 
 def find_new(catalog: DataFrame, ingest_log: DataFrame | None) -> DataFrame:
-    """Anti-join new-file discovery (ref: SMSFinder._is_new,
-    ingest_sms.py:288-294): files whose FILEID is not in the ingest log."""
+    """New-file discovery (ref: SMSFinder._is_new, ingest_sms.py:288-294):
+    catalog files whose FILEID is not in the ingest log — anti-join
+    semantics (a NULL log FILEID matches nothing).
+
+    The log's FILEID column is catalog-sized, like the directory listing
+    ``sms_catalog`` already holds on the driver, so it comes to the driver
+    in one column-pruned scan and the difference is a filter — no
+    broadcast exchange, no dedup shuffle."""
     if ingest_log is None:
         return catalog
-    return catalog.join(
-        ingest_log.select("FILEID").distinct(), "FILEID", "left_anti"
-    )
+    done = {r.FILEID for r in ingest_log.select("FILEID").collect()} - {None}
+    return catalog.filter(~F.col("FILEID").isin(sorted(done)))
 
 
 def enrich_with_sms_tsince(exposures: DataFrame, sms: DataFrame) -> DataFrame:

@@ -14,7 +14,8 @@ unpartitioned table is the one-partition case.  Layout::
 
     table/
       _versions.json                 # {"current": N, "versions": [...]}
-      v=N/                           # flat entry {"version": N}: the
+      v=N/                           # flat entry {"version": N,
+                                     #   "schema": <struct json>}: the
                                      #   whole table, one directory
       parts/g-<pid>-<host>-<uuid8>/  # partitioned entry {"version": N,
                                      #   "parts": {"2024-01": "parts/g-.."},
@@ -22,6 +23,12 @@ unpartitioned table is the one-partition case.  Layout::
                                      #   immutable generation = one
                                      #   partition's rows, schema-complete
       v.tmp-...                      # crashed stagers, reaped when dead
+
+Every entry records the schema of its data files, so a read hands it to
+the parquet reader instead of running a Spark job to infer it from a
+footer.  Flat entries written before the store recorded schemas (and the
+``v=1`` a legacy-table adoption publishes) carry none and are read with
+inference.
 
 A partitioned merge or purge stages ONLY the affected partitions as new
 generations and re-points just those keys; untouched generations are
@@ -60,6 +67,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cosmo_spark.streaming.logio import read_text, write_json_atomic
 
@@ -151,11 +159,19 @@ def _read_dirs(
     spark: SparkSession, table_path: str, entry: dict, keys=None
 ) -> DataFrame | None:
     """ONE multi-path parquet scan over an entry's data directories
-    (None when the selection is empty)."""
+    (None when the selection is empty), with the entry's recorded schema
+    when it has one — no inference job."""
     dirs = _data_dirs(entry, keys)
     if not dirs:
         return None
-    return spark.read.parquet(*[os.path.join(table_path, d) for d in dirs])
+    reader = spark.read
+    if entry.get("schema"):
+        reader = reader.schema(_schema_of(entry))
+    return reader.parquet(*[os.path.join(table_path, d) for d in dirs])
+
+
+def _schema_of(entry: dict) -> StructType:
+    return StructType.fromJson(json.loads(entry["schema"]))
 
 
 def _has_flat_data(table_path: str) -> bool:
@@ -328,7 +344,8 @@ def _publish_locked(
     schema: str | None = None,
 ) -> int:
     """The in-lock half of a publish: reap dead orphans, move the staged
-    data into place, bump the manifest.
+    data into place, bump the manifest.  ``schema`` (struct json) is the
+    staged data files' schema, recorded in the new entry.
 
     Flat (``staged`` None): ``tmp`` is the whole table and renames to
     ``v=N``.  Partitioned: each ``staged`` {key: subdir of tmp} becomes a
@@ -347,7 +364,7 @@ def _publish_locked(
     _reap_orphans_locked(table_path, doc, keep=tmp)
     if staged is None:
         os.replace(tmp, os.path.join(table_path, f"v={version}"))
-        entry = {"version": version}
+        entry = {"version": version, "schema": schema}
     else:
         cur = (
             _entry_for(doc, None, table_path)["parts"] if doc["current"] else {}
@@ -385,14 +402,14 @@ def _stage_and_publish_locked(
     heartbeat covers the distributed write).  A failed write or publish
     never leaks its tmp."""
     tmp = _new_tmp(table_path)
+    schema = schema or df.schema.json()
     try:
         if partition_col is None:
             df.write.mode("overwrite").parquet(tmp)
-            return _publish_locked(table_path, tmp, doc, guard)
+            return _publish_locked(table_path, tmp, doc, guard, schema=schema)
         staged = _stage_parts(df, tmp, partition_col)
         return _publish_locked(
-            table_path, tmp, doc, guard, staged, replaced,
-            schema or df.schema.json(),
+            table_path, tmp, doc, guard, staged, replaced, schema
         )
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -423,7 +440,9 @@ def write_snapshot(df: DataFrame, table_path: str) -> int:
             if doc["current"] is None:
                 doc = _adopt_legacy_locked(table_path)
             _current_entry(doc, table_path, None)
-            return _publish_locked(table_path, tmp, doc, guard)
+            return _publish_locked(
+                table_path, tmp, doc, guard, schema=df.schema.json()
+            )
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)   # contention must not leak
         raise
@@ -460,11 +479,7 @@ def read_snapshot(
         keys = {NULL_PART_KEY if p is None else str(p) for p in partitions}
     df = _read_dirs(spark, table_path, entry, keys)
     if df is None:
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(entry["schema"]))
-        )
+        return spark.createDataFrame([], _schema_of(entry))
     return df
 
 

@@ -61,7 +61,7 @@ def test_interleaved_swap_schedule_loses_no_rows(spark, tmp_path):
     real_publish = versioned_mod._publish_locked
     contention: list[Exception] = []
 
-    def publish_with_concurrent_writer(table_path, tmp, doc, guard=None):
+    def publish_with_concurrent_writer(table_path, tmp, doc, *args, **kwargs):
         # writer A has read the base and is about to publish; writer B's
         # whole merge attempt happens NOW — the schedule that silently
         # dropped B's rows pre-lock
@@ -72,7 +72,7 @@ def test_interleaved_swap_schedule_loses_no_rows(spark, tmp_path):
             )
         except MergeContentionError as e:
             contention.append(e)
-        return real_publish(table_path, tmp, doc, guard)
+        return real_publish(table_path, tmp, doc, *args, **kwargs)
 
     versioned_mod._publish_locked = publish_with_concurrent_writer
     try:

@@ -4,6 +4,8 @@ re-ingest, supersede)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from cosmo_spark.operators.merge import merge_versioned
@@ -18,6 +20,9 @@ from cosmo_spark.sources.sms import (
 # the driver's verify completes inside its window (r13 verdict #7); run via
 # `pytest -m slow` or the full suite via `pytest --override-ini addopts= tests/`
 pytestmark = pytest.mark.slow
+
+#: the checkout these tests belong to; the CLI subprocess runs from it
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 HEADER = "# SMS schedule report\n# generated for test\n"
 LINE = (
@@ -124,7 +129,7 @@ def test_ingest_cli_end_to_end(spark, tmp_path):
         return subprocess.run(
             [_sys.executable, "-m", "cosmo_spark.runner", "--ingest", str(sms_dir),
              "--data-dir", str(data_dir), "--master", "local[2]"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
+            capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
         )
 
     proc = run()

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -18,6 +19,9 @@ from cosmo_spark.sources.files import (
     read_telemetry_series,
     write_results_csv,
 )
+
+#: the checkout these tests belong to; the CLI subprocess runs from it
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_ancillary_csv_dedup(spark, tmp_path):
@@ -126,7 +130,7 @@ def test_runner_cli_end_to_end(spark, tmp_path):
         [sys.executable, "-m", "cosmo_spark.runner", "--cadence", "monthly",
          "--data-dir", str(data_dir), "--out", str(out_dir),
          "--figures", "--master", "local[2]"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     written = os.listdir(out_dir)

@@ -371,3 +371,98 @@ def test_purge_keeps_a_merge_published_during_it(spark, tmp_path, monkeypatch):
     if deferred:   # the rival failed loudly; it retries after the purge
         merge_into_path(spark, path, late, "k", "ver")
     assert {r.k for r in read_current(spark, path).collect()} == {"a", "c"}
+
+
+def _rich_frame(spark, ids, month="2024-01"):
+    """A frame with nested and temporal types, so a schema mismatch shows
+    in more than names."""
+    import datetime
+
+    rows = [
+        (i, month, float(i), datetime.datetime(2024, 1, 1, 0, 0, i),
+         [f"t{i}"], (i, f"s{i}"))
+        for i in ids
+    ]
+    return spark.createDataFrame(
+        rows,
+        "id INT, month STRING, val DOUBLE, ts TIMESTAMP, tags ARRAY<STRING>, "
+        "st STRUCT<a: INT, b: STRING>",
+    )
+
+
+def _inferred_schema(spark, path, version):
+    """The schema parquet inference gives over a version's data dirs."""
+    from cosmo_spark.sources.versioned import _entry_for, _read_manifest
+
+    entry = _entry_for(_read_manifest(path), version, path)
+    dirs = [f"v={version}"] if "parts" not in entry else entry["parts"].values()
+    return spark.read.parquet(*[os.path.join(path, d) for d in dirs]).schema
+
+
+@pytest.mark.parametrize("partition_col", [None, "month"])
+def test_manifest_schema_reads_match_inference(spark, tmp_path, partition_col):
+    """Every published entry records its data files' schema, and reads use
+    it: read_current and read_snapshot (current and a pinned old version)
+    return exactly the schema inference gives — names, types and
+    nullability — without running a Spark job."""
+    from cosmo_spark.operators.merge import merge_into_path
+    from cosmo_spark.sources.versioned import _read_manifest, read_current
+
+    path = str(tmp_path / "tbl")
+    merge_into_path(spark, path, _rich_frame(spark, [1, 2]), "id", "val",
+                    partition_col=partition_col)
+    merge_into_path(spark, path, _rich_frame(spark, [3], "2024-02"), "id",
+                    "val", partition_col=partition_col)
+    doc = _read_manifest(path)
+    assert all(e.get("schema") for e in doc["versions"])
+
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.numTotalJobs()
+    reads = {
+        "current": read_current(spark, path),
+        "snapshot": read_snapshot(spark, path),
+        "pinned": read_snapshot(spark, path, 1),
+    }
+    assert jobs.numTotalJobs() == before, "a manifest-schema read ran a job"
+    for name, df in reads.items():
+        version = 1 if name == "pinned" else 2
+        assert df.schema == _inferred_schema(spark, path, version), name
+    assert read_snapshot(spark, path, 1).count() == 2
+    assert read_current(spark, path).count() == 3
+
+
+def test_schema_less_flat_entries_still_read_merge_and_vacuum(spark, tmp_path):
+    """A flat manifest written before entries recorded schemas reads
+    through inference, and the next merge publishes an entry that carries
+    one; vacuum handles the mixed manifest."""
+    from cosmo_spark.operators.merge import merge_into_path
+    from cosmo_spark.sources.versioned import (
+        _manifest_path,
+        _read_manifest,
+        read_current,
+    )
+    from cosmo_spark.streaming.logio import write_json_atomic
+
+    path = str(tmp_path / "tbl")
+    merge_into_path(spark, path, _rich_frame(spark, [1, 2]), "id", "val")
+    merge_into_path(spark, path, _rich_frame(spark, [3]), "id", "val")
+    doc = _read_manifest(path)
+    for e in doc["versions"]:
+        del e["schema"]
+    write_json_atomic(_manifest_path(path), doc)
+
+    assert read_current(spark, path).schema == _inferred_schema(spark, path, 2)
+    assert sorted(r.id for r in read_current(spark, path).collect()) == [1, 2, 3]
+    assert read_snapshot(spark, path, 1).count() == 2
+
+    v3 = merge_into_path(spark, path, _rich_frame(spark, [4]), "id", "val")
+    entries = {e["version"]: e for e in _read_manifest(path)["versions"]}
+    assert "schema" not in entries[1] and "schema" not in entries[2]
+    assert entries[v3]["schema"]
+    assert read_current(spark, path).schema == _inferred_schema(spark, path, v3)
+    assert sorted(r.id for r in read_current(spark, path).collect()) == [1, 2, 3, 4]
+
+    assert vacuum_snapshots(spark, path, keep_last=1) == [1, 2]
+    assert snapshot_versions(path) == [v3]
+    assert not os.path.exists(os.path.join(path, "v=1"))
+    assert read_current(spark, path).count() == 4

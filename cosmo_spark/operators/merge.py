@@ -368,10 +368,7 @@ def merge_into_path(
     data dirs).
 
     Flat table (``partition_col`` None): a full rewrite published as
-    ``v=N``.  A legacy FLAT parquet table is adopted zero-copy on its
-    first merge: the existing part files MOVE into ``v=1`` before the
-    merged state publishes as ``v=2`` — the pre-merge state is never
-    destroyed.
+    ``v=N``.
 
     Partitioned table: reads ONLY the partitions the update batch
     touches, merges, stages new generations for exactly those
@@ -383,8 +380,12 @@ def merge_into_path(
     collect every table format's commit protocol performs); ``updates``
     is persisted because it feeds the emptiness probe, that collect and
     the merge.  An empty batch publishes nothing and returns the current
-    id.  A raw Hive-layout directory (``<col>=<val>/``, no manifest) is
-    refused — adopt it once via ``sources.versioned.adopt_partitioned``.
+    id.
+
+    The first merge creates the table.  A directory with no manifest
+    that holds anything but store entries (a plain or Hive-layout parquet
+    table) is refused with a ValueError — adopt it once into a fresh
+    table via ``sources.versioned.adopt_table``.
 
     ``partition_col`` must match the table's shape (ValueError
     otherwise): a flat merge into a partitioned table, or the reverse,
@@ -406,31 +407,10 @@ def merge_into_path(
 
     os.makedirs(path, exist_ok=True)
     if partition_col is not None:
-        from cosmo_spark.sources.files import fs_exists, fs_list_names
-
-        # every probe scheme-portable (Hadoop FS, not os.*): on an
-        # hdfs:///object-store table the local calls would raise
-        # FileNotFoundError (os.listdir) or silently miss the manifest,
-        # defeating the adopt guard (r11 advice)
-        if (
-            not fs_exists(spark, os.path.join(path, vs._MANIFEST))
-            and fs_exists(spark, path)
-            and any(
-                e.startswith(f"{partition_col}=")
-                for e in fs_list_names(spark, path)
-            )
-        ):
-            raise ValueError(
-                f"{path} is a raw Hive-layout table with no version "
-                f"manifest: adopt it once via sources.versioned."
-                f"adopt_partitioned"
-            )
         updates = updates.persist()
     try:
         with _table_lock(spark, path.rstrip("/")) as guard:
             doc = vs._read_manifest(path)
-            if doc["current"] is None and partition_col is None:
-                doc = vs._adopt_legacy_locked(path)
             entry = vs._current_entry(doc, path, partition_col)
             affected = None
             if partition_col is not None:

@@ -42,6 +42,7 @@ def main(argv: list[str] | None = None) -> int:
     from cosmo_spark.session import get_spark
     from cosmo_spark.monitors import MONITORS, run_monitors
     from cosmo_spark.sources.files import write_results_csv
+    from cosmo_spark.sources.versioned import read_current
 
     spark = get_spark(app_name="cosmo-spark-runner", master=args.master)
 
@@ -53,12 +54,14 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
     # load whichever monitor inputs exist under data-dir; monitors whose
-    # inputs are absent are skipped (ref behavior: monitors run independently)
+    # inputs are absent are skipped (ref behavior: monitors run independently).
+    # read_current: a table a merge maintains reads as its manifest-pinned
+    # current version, a plain parquet input as itself
     wanted = sorted({k for _, fn in MONITORS.values() for k in fn.__required_inputs__})
     inputs = {}
     for name in wanted:
         path = os.path.join(args.data_dir, f"{name}.parquet")
-        inputs[name] = spark.read.parquet(path) if os.path.exists(path) else None
+        inputs[name] = read_current(spark, path) if os.path.exists(path) else None
 
     results = run_monitors(args.cadence, inputs)
     if not results:

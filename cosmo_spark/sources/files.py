@@ -1,4 +1,4 @@
-"""Ancillary file sources and sinks (SURVEY §2.1 S11-S13, S15-S18).
+"""Ancillary file sources and sinks (SURVEY §2.1 S11-S13, S18).
 
 The reference reads ancillary CSVs, whitespace-separated telemetry series,
 JSON state maps, and an Excel mnemonic sheet via pandas
@@ -149,13 +149,6 @@ def write_results_csv(df: DataFrame, path: str, single_file: bool = True) -> Non
     out.write.mode("overwrite").option("header", True).csv(path)
 
 
-def append_table(df: DataFrame, path: str) -> None:
-    """DataModel ingest sink: append new rows to the model's table
-    (ref: model.ingest(), docs/source/api.rst:101-125).  Keyed upserts go
-    through operators.merge instead."""
-    df.write.mode("append").parquet(path)
-
-
 def attach_prop_typ(df: DataFrame, ancillary: DataFrame) -> DataFrame:
     """Attach the PROP_TYP label from the ancillary CSV table by ROOTNAME
     (ref: cosmo/monitor_helpers.py:147-159 ``get_prop_typ`` — dedupe on
@@ -171,29 +164,14 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
 
     ``os.path.exists`` only sees the LOCAL filesystem — on hdfs:// or
     object-store paths it silently answers False, which for the
-    read-if-present call sites (merge_into_path, the rollup maintenance)
-    would mean treating an existing table as absent and overwriting it.
+    read-if-present call sites (the streaming rollup maintenance) would
+    mean treating an existing table as absent and overwriting it.
     Same handle discipline as ``atomic_overwrite`` below.
     """
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(p))
-
-
-def fs_list_names(spark: SparkSession, path: str) -> list[str]:
-    """Child entry names of ``path`` through the Hadoop FileSystem API —
-    the scheme-portable ``os.listdir`` (empty list when absent).  The
-    layout guards in operators/merge.py probe partition directories with
-    this instead of ``os.listdir`` so an hdfs:///object-store table gets
-    the intended adopt-or-hive ValueError, not a local FileNotFoundError
-    (r11 advice)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 def fs_dir_bytes(spark: SparkSession, path: str) -> int:

@@ -26,9 +26,14 @@ unpartitioned table is the one-partition case.  Layout::
 
 Every entry records the schema of its data files, so a read hands it to
 the parquet reader instead of running a Spark job to infer it from a
-footer.  Flat entries written before the store recorded schemas (and the
-``v=1`` a legacy-table adoption publishes) carry none and are read with
-inference.
+footer.  Flat entries written before the store recorded schemas carry
+none and are read with inference.
+
+The manifest is the only commit point: a data directory it does not list
+is a crashed publisher's leftover and is reaped, never adopted.  Existing
+parquet tables (flat or Hive-layout) enter the store through one explicit
+rewrite, ``adopt_table``; a first publish into a directory holding
+anything but store entries is refused.
 
 A partitioned merge or purge stages ONLY the affected partitions as new
 generations and re-points just those keys; untouched generations are
@@ -36,8 +41,9 @@ shared byte-identically by every version that lists them, and vacuum
 refcounts them (a directory dies only when no surviving version lists
 it).
 
-Partition keys are strings — ``CAST(partition_col AS STRING)`` (NULL ->
-the Hive default-partition sentinel), computed identically on the
+Partition keys are strings — ``CAST(partition_col AS STRING)``, with NULL
+and the empty string both mapped to the Hive default-partition sentinel
+(the directory Spark's writer gives both), computed identically on the
 staging write (``partitionBy`` on the derived ``__part`` column) and the
 affected-set probe, so the two can never disagree.  The key is only a
 manifest index: the real typed column rides IN the data files (the
@@ -78,13 +84,9 @@ _MANIFEST = "_versions.json"
 #: always younger — parquet part files keep landing in it
 _TMP_MAX_AGE_S = 24 * 3600
 
-#: the flat-table adoption tmp has a FIXED name so an interrupted migration
-#: resumes (moves the remaining flat entries into the same dir) instead of
-#: being reaped with half the table inside
-_MIG_TMP = "v.tmp-migrate"
-
-#: manifest key for a NULL partition value — the Hive sentinel, so the
-#: staging write's directory name and the probe's key string agree
+#: manifest key for a NULL or empty-string partition value — the Hive
+#: sentinel, so the staging write's directory name and the probe's key
+#: string agree
 NULL_PART_KEY = "__HIVE_DEFAULT_PARTITION__"
 
 _STAGE_COL = "__part"
@@ -96,8 +98,8 @@ def _manifest_path(table_path: str) -> str:
 
 def _read_manifest(table_path: str) -> dict:
     # read_text + json.loads, NOT logio.read_json: a corrupt manifest must
-    # fail loudly — read as "no manifest" it would send the legacy-adopt
-    # and orphan-reap paths after every published v=N
+    # fail loudly — read as "no manifest" it would send the next publish's
+    # orphan reaper after every published v=N
     text = read_text(_manifest_path(table_path))
     if text is None:
         return {"current": None, "versions": []}
@@ -174,64 +176,22 @@ def _schema_of(entry: dict) -> StructType:
     return StructType.fromJson(json.loads(entry["schema"]))
 
 
-def _has_flat_data(table_path: str) -> bool:
-    """True when ``table_path`` holds a legacy FLAT parquet table (part
-    files directly in the dir, no version manifest)."""
-    if not os.path.isdir(table_path):
-        return False
-    for entry in os.listdir(table_path):
-        if entry == _MANIFEST or entry.startswith(("v=", "v.tmp-")):
-            continue
-        if entry.startswith("part-") or entry.endswith(".parquet") \
-                or entry == "_SUCCESS":
-            return True
-    return False
-
-
-def _adopt_legacy_locked(table_path: str) -> dict:
-    """Adopt pre-versioned state as version 1 — ZERO-COPY: legacy flat
-    entries MOVE into ``v=1``, so the pre-merge state of a table that
-    predates versioning becomes time-travelable instead of being
-    destroyed by its first snapshot-backed publish.  Caller holds the
-    table lock and the manifest is absent.
-
-    Crash-complete (r9 self-review #1): every interruption point of a
-    previous attempt resumes or completes here, never loses the table —
-    - ``v=1`` present, no flat/tmp remnants: a predecessor crashed
-      between its final rename and the manifest write; just adopt it
-      (without this, the orphan reaper would see an unknown v=1 and
-      DELETE the only copy of the table).
-    - migration tmp present (crash mid-move): keep moving the remaining
-      flat entries into it, then rename + manifest.
-    - flat entries only: the full move.
-    Returns the manifest doc ({current: None} when there is nothing to
-    adopt).  A concurrent lock-free FLAT reader racing the one-time
-    migration may fail loudly mid-scan — run the first snapshot-backed
-    publish at a quiet moment."""
-    v1 = os.path.join(table_path, "v=1")
-    mig = os.path.join(table_path, _MIG_TMP)
-    has_flat = _has_flat_data(table_path)
-    if os.path.isdir(v1):
-        if has_flat or os.path.isdir(mig):
-            raise RuntimeError(
-                f"{table_path}: both v=1 and unmigrated legacy state "
-                f"exist — refusing to guess which is the table; inspect "
-                f"and remove one manually"
-            )
-        doc = {"current": 1, "versions": [{"version": 1}]}
-        write_json_atomic(_manifest_path(table_path), doc)
-        return doc
-    if not has_flat and not os.path.isdir(mig):
-        return {"current": None, "versions": []}
-    os.makedirs(mig, exist_ok=True)
-    for entry in os.listdir(table_path):
-        if entry == _MANIFEST or entry.startswith(("v=", "v.tmp-")):
-            continue
-        os.rename(os.path.join(table_path, entry), os.path.join(mig, entry))
-    os.replace(mig, v1)
-    doc = {"current": 1, "versions": [{"version": 1}]}
-    write_json_atomic(_manifest_path(table_path), doc)
-    return doc
+def _refuse_foreign_locked(table_path: str) -> None:
+    """First-publish guard (caller holds the lock; no manifest exists):
+    refuse a directory holding anything but store entries — the manifest
+    (and its .tmp), ``v=N``, ``v.tmp-*``, ``parts/`` — such as a plain or
+    Hive-layout parquet table, instead of publishing beside it."""
+    foreign = sorted(
+        e for e in os.listdir(table_path)
+        if not (e.startswith((_MANIFEST, "v.tmp-")) or e == "parts"
+                or re.fullmatch(r"v=\d+", e))
+    )
+    if foreign:
+        raise ValueError(
+            f"{table_path} holds {foreign[:3]} but no version manifest: "
+            f"rewrite it once into a fresh versioned table via "
+            f"sources.versioned.adopt_table"
+        )
 
 
 def _abandoned(entry: str, full: str) -> bool:
@@ -258,14 +218,14 @@ def _reap_orphans_locked(table_path: str, doc: dict, keep: str) -> None:
     """Remove crashed publishers' leftovers.  Caller holds the table lock.
     A data directory listed by ANY manifest version is never touched.
 
-    - ``v=N`` dirs the manifest never adopted (crash between rename and
-      manifest write — such dirs are only ever created inside the lock,
-      so any unknown one is dead) are removed.
+    - ``v=N`` dirs the manifest does not list (crash between rename and
+      manifest write, a first publish's included — such dirs are only
+      ever created inside the lock, so any unknown one is dead) are
+      removed.
     - ``v.tmp-*`` dirs may belong to a LIVE publisher writing OUTSIDE the
       lock (write_snapshot), and unlisted ``parts/g-*`` generations to a
       live holder whose lease was broken mid-publish, so both are reaped
       only once provably abandoned (``_abandoned``).
-    - the fixed-name migration tmp is never reaped (it resumes instead).
     """
     live = {d for e in doc["versions"] for d in _data_dirs(e)}
     pdir = os.path.join(table_path, "parts")
@@ -278,7 +238,7 @@ def _reap_orphans_locked(table_path: str, doc: dict, keep: str) -> None:
                 shutil.rmtree(full, ignore_errors=True)
     for entry in os.listdir(table_path):
         full = os.path.join(table_path, entry)
-        if full == keep or entry == _MIG_TMP or not os.path.isdir(full):
+        if full == keep or not os.path.isdir(full):
             continue
         if ".tmp-" in entry:
             if _abandoned(entry, full):
@@ -306,7 +266,8 @@ def _unescape_dirname(name: str) -> str:
 
 def _key_expr(partition_col: str):
     return F.coalesce(
-        F.col(partition_col).cast("string"), F.lit(NULL_PART_KEY)
+        F.nullif(F.col(partition_col).cast("string"), F.lit("")),
+        F.lit(NULL_PART_KEY),
     )
 
 
@@ -357,9 +318,12 @@ def _publish_locked(
     re-verified before the destructive reap and again immediately before
     the manifest commit, so a holder whose lease was broken while it was
     paused aborts LOUDLY here instead of committing over its successor's
-    state (r9 self-review #2/#3)."""
+    state (r9 self-review #2/#3).  A table's first publish runs
+    ``_refuse_foreign_locked`` before anything is reaped or moved."""
     if guard is not None:
         guard.verify()
+    if doc["current"] is None:
+        _refuse_foreign_locked(table_path)
     version = (doc["current"] or 0) + 1
     _reap_orphans_locked(table_path, doc, keep=tmp)
     if staged is None:
@@ -437,8 +401,6 @@ def write_snapshot(df: DataFrame, table_path: str) -> int:
     try:
         with _lock(spark, table_path) as guard:
             doc = _read_manifest(table_path)
-            if doc["current"] is None:
-                doc = _adopt_legacy_locked(table_path)
             _current_entry(doc, table_path, None)
             return _publish_locked(
                 table_path, tmp, doc, guard, schema=df.schema.json()
@@ -449,11 +411,11 @@ def write_snapshot(df: DataFrame, table_path: str) -> int:
 
 
 def read_current(spark: SparkSession, table_path: str) -> DataFrame:
-    """Read the table's current state whether it is a versioned snapshot
-    table of either shape (manifest present -> pinned current version)
-    or a legacy flat parquet dir — the reader every merge-target
-    consumer should use now that merges publish versions (runner,
-    streaming ingest)."""
+    """Read the table's current state: the manifest-pinned current
+    version of a versioned table of either shape, or a plain parquet read
+    of a directory with no manifest (an unversioned input table) — the
+    reader for every table a merge may maintain (runner ingest and
+    monitor inputs, streaming ingest)."""
     if _read_manifest(table_path)["current"] is not None:
         return read_snapshot(spark, table_path)
     return spark.read.parquet(table_path)
@@ -476,7 +438,10 @@ def read_snapshot(
     if partitions is not None:
         if "parts" not in entry:
             raise ValueError(f"{table_path} is a flat table: no partitions")
-        keys = {NULL_PART_KEY if p is None else str(p) for p in partitions}
+        keys = {
+            NULL_PART_KEY if p is None or p == "" else str(p)
+            for p in partitions
+        }
     df = _read_dirs(spark, table_path, entry, keys)
     if df is None:
         return spark.createDataFrame([], _schema_of(entry))
@@ -569,8 +534,6 @@ def purge_keys(
     try:
         with _lock(spark, table_path) as guard:
             doc = _read_manifest(table_path)
-            if doc["current"] is None and partition_col is None:
-                doc = _adopt_legacy_locked(table_path)
             entry = _current_entry(doc, table_path, partition_col)
             if entry is None:
                 raise KeyError(f"no published versions under {table_path}")
@@ -600,23 +563,23 @@ def purge_keys(
         keys.unpersist()
 
 
-def adopt_partitioned(
+def adopt_table(
     spark: SparkSession,
     table_path: str,
     source_path: str,
-    partition_col: str,
+    partition_col: str | None = None,
 ) -> int:
-    """One-time migration of an existing HIVE-LAYOUT partitioned table
-    (``<col>=<val>`` directories, partition values only in the paths)
-    into a versioned store at ``table_path``: read with basePath so Spark
-    re-materializes the partition column, rewrite through the standard
-    staging path (the files gain the in-file partition column every
-    later read relies on), publish as v1.  A REWRITE by design —
-    Hive-layout data files lack the partition column, so zero-copy
-    adoption would poison every multi-path read; the one-time cost buys
-    shared-generation history from then on.  ``table_path`` must not
-    already be a versioned table (publishes v1 only).
+    """The one way an existing parquet table enters the store: read
+    ``source_path`` (flat, or Hive layout — read with basePath so Spark
+    re-materializes the partition column) and rewrite it through the
+    standard staging path as v1 of the fresh table ``table_path``, flat
+    or partitioned by ``partition_col``.  A REWRITE by design: Hive-layout
+    files lack the in-file partition column every multi-path read relies
+    on, and the untouched source makes a failed adoption safe to rerun.
+    Refuses a ``table_path`` that already has versions or is the source.
     """
+    if os.path.realpath(table_path) == os.path.realpath(source_path):
+        raise ValueError("adopt_table: table_path must differ from source_path")
     os.makedirs(table_path, exist_ok=True)
     with _lock(spark, table_path) as guard:
         doc = _read_manifest(table_path)
@@ -626,11 +589,8 @@ def adopt_partitioned(
                 f"only into a fresh table"
             )
         src = spark.read.option("basePath", source_path).parquet(source_path)
-        if partition_col not in src.columns:
-            raise ValueError(
-                f"{source_path} has no {partition_col!r} partition "
-                f"directories to adopt"
-            )
+        if partition_col is not None and partition_col not in src.columns:
+            raise ValueError(f"{source_path} has no {partition_col!r} column")
         return _stage_and_publish_locked(
             table_path, doc, src, guard, partition_col
         )

@@ -153,7 +153,7 @@ def test_layout_mismatch_fails_loud(spark, tmp_path):
     )
     hive = str(tmp_path / "hive_tbl")
     df.write.partitionBy("month").parquet(hive)
-    with pytest.raises(ValueError, match="adopt_partitioned"):
+    with pytest.raises(ValueError, match="adopt_table"):
         merge_into_path(spark, hive, df, "k", "ver", "month")
 
     vers = str(tmp_path / "vers_tbl")
@@ -170,7 +170,7 @@ def test_layout_mismatch_fails_loud(spark, tmp_path):
 def test_adopting_hive_table_unblocks_versioned_merges(spark, tmp_path):
     """The one-time migration the mismatch error points at: adopt, then
     the default path merges and the full pre-adoption state is v1."""
-    from cosmo_spark.sources.versioned import adopt_partitioned
+    from cosmo_spark.sources.versioned import adopt_table
 
     path = str(tmp_path / "migrate")
     base = spark.createDataFrame(
@@ -179,7 +179,7 @@ def test_adopting_hive_table_unblocks_versioned_merges(spark, tmp_path):
     )
     base.write.partitionBy("month").parquet(path)
     store = str(tmp_path / "migrate_store")
-    adopt_partitioned(spark, store, path, "month")
+    adopt_table(spark, store, path, "month")
     upd = spark.createDataFrame(
         [("k1", 2, "2024-01", "a2")],
         "k STRING, ver INT, month STRING, payload STRING",

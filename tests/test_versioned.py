@@ -5,7 +5,6 @@ vacuum retention, and CDC between versions via snapshot_diff."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
@@ -128,28 +127,38 @@ def test_merge_publishes_time_travelable_versions(spark, tmp_path):
     )
 
 
-def test_merge_adopts_flat_table_zero_copy(spark, tmp_path):
-    """A legacy FLAT parquet table's first snapshot-backed merge moves the
-    existing files into v=1 (pre-merge state retained) and publishes the
-    merged state as v=2."""
+def test_adopt_table_publishes_flat_table_as_v1(spark, tmp_path):
+    """A plain FLAT parquet table enters the store through one explicit
+    rewrite: adopt_table publishes it as v1 of a fresh table (pre-merge
+    state retained) and the first merge publishes v2.  A publish straight
+    into the plain directory is refused and leaves it untouched."""
     from cosmo_spark.operators.merge import merge_into_path
-    from cosmo_spark.sources.versioned import read_current
+    from cosmo_spark.sources.versioned import adopt_table, read_current
 
-    path = str(tmp_path / "flat")
-    spark.createDataFrame(
-        [("a", 1, "old")], "k STRING, ver INT, payload STRING"
-    ).write.parquet(path)
+    def mframe(rows):
+        return spark.createDataFrame(rows, "k STRING, ver INT, payload STRING")
 
-    v = merge_into_path(
-        spark, path,
-        spark.createDataFrame([("a", 2, "new")],
-                              "k STRING, ver INT, payload STRING"),
-        "k", "ver",
-    )
+    src = str(tmp_path / "flat")
+    mframe([("a", 1, "old")]).write.parquet(src)
+    before = sorted(os.listdir(src))
+    with pytest.raises(ValueError, match="adopt_table"):
+        merge_into_path(spark, src, mframe([("a", 2, "new")]), "k", "ver")
+    with pytest.raises(ValueError, match="adopt_table"):
+        write_snapshot(mframe([("a", 2, "new")]), src)
+    assert sorted(os.listdir(src)) == before, "a refused publish leaves no trace"
+
+    path = str(tmp_path / "store")
+    assert adopt_table(spark, path, src) == 1
+    v = merge_into_path(spark, path, mframe([("a", 2, "new")]), "k", "ver")
     assert v == 2 and snapshot_versions(path) == [1, 2]
     assert {r.payload for r in read_snapshot(spark, path, 1).collect()} \
         == {"old"}
     assert {r.payload for r in read_current(spark, path).collect()} == {"new"}
+    assert {r.payload for r in spark.read.parquet(src).collect()} == {"old"}
+    with pytest.raises(RuntimeError, match="already has published"):
+        adopt_table(spark, path, src)
+    with pytest.raises(ValueError, match="must differ"):
+        adopt_table(spark, src, src)
 
 
 def test_slow_publish_blocks_no_reader_and_no_rival_publisher(spark, tmp_path):
@@ -200,47 +209,60 @@ def test_slow_publish_blocks_no_reader_and_no_rival_publisher(spark, tmp_path):
     assert _state(spark, path, 3) == {"a": 99}
 
 
-def test_interrupted_migration_recovers_without_data_loss(spark, tmp_path):
-    """r9 self-review #1: both crash windows of the flat-table adoption
-    must recover on the next merge — never hand the orphan reaper the
-    only copy of the table."""
-    import os
-    import shutil
+def _crash_manifest_write(*args, **kwargs):
+    raise OSError("injected crash before the manifest write")
 
+
+def test_failed_adoption_leaves_source_intact_and_reruns(
+    spark, tmp_path, monkeypatch
+):
+    """adopt_table rewrites, never moves: an adoption that dies before
+    its manifest write leaves the source byte-for-byte in place, and a
+    rerun adopts it (the dead attempt's unlisted v=1 is reaped)."""
+    import cosmo_spark.sources.versioned as versioned_mod
+    from cosmo_spark.sources.versioned import adopt_table
+
+    src = str(tmp_path / "flat")
+    spark.createDataFrame([("a", 1), ("b", 2)], "k STRING, val INT") \
+        .coalesce(2).write.parquet(src)
+    before = sorted(os.listdir(src))
+    path = str(tmp_path / "store")
+    with monkeypatch.context() as m:
+        m.setattr(versioned_mod, "write_json_atomic", _crash_manifest_write)
+        with pytest.raises(OSError, match="injected"):
+            adopt_table(spark, path, src)
+    assert sorted(os.listdir(src)) == before
+    assert {r.k: r.val for r in spark.read.parquet(src).collect()} \
+        == {"a": 1, "b": 2}
+    assert snapshot_versions(path) == []
+
+    assert adopt_table(spark, path, src) == 1
+    assert snapshot_versions(path) == [1]
+    assert _state(spark, path) == {"a": 1, "b": 2}
+
+
+def test_crashed_first_publish_is_not_resurrected(spark, tmp_path, monkeypatch):
+    """The manifest is the only commit point: a first merge that dies
+    between its v=1 rename and its manifest write never committed, so
+    the next merge reaps that v=1 instead of adopting it as version 1."""
+    import cosmo_spark.sources.versioned as versioned_mod
     from cosmo_spark.operators.merge import merge_into_path
+    from cosmo_spark.sources.versioned import read_current
 
     def mframe(rows):
         return spark.createDataFrame(rows, "k STRING, ver INT, payload STRING")
 
-    # (a) crash AFTER the v=1 rename, BEFORE the manifest write: simulate
-    # by building a healthy versioned table and deleting the manifest
-    path = str(tmp_path / "a")
-    spark.createDataFrame([("a", 1, "old")],
-                          "k STRING, ver INT, payload STRING").write.parquet(path)
-    merge_into_path(spark, path, mframe([("b", 1, "b1")]), "k", "ver")
-    os.remove(os.path.join(path, "_versions.json"))
-    shutil.rmtree(os.path.join(path, "v=2"))   # the unadopted state is v=1
-    merge_into_path(spark, path, mframe([("c", 1, "c1")]), "k", "ver")
-    assert {r.k for r in read_snapshot(spark, path, 1).collect()} == {"a"}, (
-        "the orphan reaper must not eat the unadopted v=1"
-    )
-    assert {r.k for r in read_snapshot(spark, path).collect()} == {"a", "c"}
+    path = str(tmp_path / "tbl")
+    with monkeypatch.context() as m:
+        m.setattr(versioned_mod, "write_json_atomic", _crash_manifest_write)
+        with pytest.raises(OSError, match="injected"):
+            merge_into_path(spark, path, mframe([("a", 1, "lost")]), "k", "ver")
+    assert os.path.isdir(os.path.join(path, "v=1"))   # the crash's leftover
+    assert snapshot_versions(path) == []
 
-    # (b) crash MID-MOVE: some flat entries already inside v.tmp-migrate
-    path = str(tmp_path / "b")
-    spark.createDataFrame([("a", 1, "old"), ("b", 1, "old")],
-                          "k STRING, ver INT, payload STRING") \
-        .coalesce(2).write.parquet(path)
-    mig = os.path.join(path, "v.tmp-migrate")
-    os.makedirs(mig)
-    moved = [e for e in os.listdir(path)
-             if e.startswith("part-")][:1]      # half the move happened
-    for e in moved:
-        os.rename(os.path.join(path, e), os.path.join(mig, e))
-    merge_into_path(spark, path, mframe([("c", 2, "new")]), "k", "ver")
-    assert {r.k for r in read_snapshot(spark, path, 1).collect()} \
-        == {"a", "b"}, "resumed migration must recover ALL flat rows"
-    assert {r.k for r in read_snapshot(spark, path).collect()} == {"a", "b", "c"}
+    v = merge_into_path(spark, path, mframe([("b", 1, "b1")]), "k", "ver")
+    assert v == 1 and snapshot_versions(path) == [1]
+    assert {r.k for r in read_current(spark, path).collect()} == {"b"}
 
 
 def test_broken_lease_holder_aborts_at_commit(spark, tmp_path):

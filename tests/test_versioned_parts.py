@@ -112,8 +112,8 @@ def test_empty_updates_noop_and_manifest_pruned_read(spark, tmp_path):
 
 
 def test_null_int_and_date_partition_values_roundtrip(spark, tmp_path):
-    """NULL maps to the Hive sentinel key; int and date keys match their
-    Spark cast-to-string form, so manifest pruning by VALUE works."""
+    """NULL and "" map to the Hive sentinel key; int and date keys match
+    their Spark cast-to-string form, so manifest pruning by VALUE works."""
     path = str(tmp_path / "tnull")
     df = spark.createDataFrame(
         [("a", 1, None, "x"), ("b", 1, "2024-03", "y")], SCHEMA
@@ -148,6 +148,23 @@ def test_null_int_and_date_partition_values_roundtrip(spark, tmp_path):
         ).count()
         == 1
     )
+
+    # "" shares the sentinel partition with NULL (Spark's writer puts both
+    # in it), so one batch may hold both, and merges, the version guard,
+    # pruned reads and purges all see that partition's rows
+    path4 = str(tmp_path / "tempty")
+    both = spark.createDataFrame([("a", 1, "", "x"), ("n", 1, None, "y")], SCHEMA)
+    merge_into_path(spark, path4, both, "k", "ver", "month")
+    assert partition_keys(path4) == [NULL_PART_KEY]
+    for ver, payload in ((1, "b1"), (0, "stale")):
+        upd = spark.createDataFrame([("b", ver, "", payload)], SCHEMA)
+        merge_into_path(spark, path4, upd, "k", "ver", "month")
+    want = {"a": (1, "", "x"), "n": (1, None, "y"), "b": (1, "", "b1")}
+    assert _state(read_snapshot(spark, path4)) == want
+    assert _state(read_snapshot(spark, path4, partitions=[""])) == want
+    tomb = spark.createDataFrame([("a",)], "k STRING")
+    purge_keys(spark, path4, "k", tomb, "month")
+    assert set(_state(read_current(spark, path4))) == {"n", "b"}
 
 
 def test_purge_rewrites_only_affected_and_drops_empty_partition(
@@ -307,13 +324,13 @@ def test_adopt_hive_layout_table(spark, tmp_path):
     rewrites through staging (files gain the in-file partition column),
     publishes v1 identical row-for-row, and the adopted table then
     merges/travels like a native one.  Double adoption fails loudly."""
-    from cosmo_spark.sources.versioned import adopt_partitioned
+    from cosmo_spark.sources.versioned import adopt_table
 
     hive = str(tmp_path / "hive")
     _base(spark).write.partitionBy("month").parquet(hive)
 
     path = str(tmp_path / "vp")
-    v1 = adopt_partitioned(spark, path, hive, "month")
+    v1 = adopt_table(spark, path, hive, "month")
     assert v1 == 1
     assert _state(read_snapshot(spark, path)) == _state(_base(spark))
     assert partition_keys(path) == ["2024-01", "2024-02"]
@@ -326,4 +343,4 @@ def test_adopt_hive_layout_table(spark, tmp_path):
         _base(spark)
     )
     with pytest.raises(RuntimeError, match="already has published"):
-        adopt_partitioned(spark, path, hive, "month")
+        adopt_table(spark, path, hive, "month")
